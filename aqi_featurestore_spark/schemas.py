@@ -16,6 +16,7 @@ from pyspark.sql.types import (
     FloatType,
     IntegerType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
@@ -146,6 +147,21 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
+
+
+def as_nullable(dt):
+    """``dt`` with every field, element and map value nullable: the
+    schema Spark infers back from parquet it wrote (its writer makes all
+    columns nullable), so a store that records this can skip inference."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(as_nullable(dt.keyType), as_nullable(dt.valueType), True)
+    return dt
 
 
 def load_testdata(spark, sf_dir: str, *names: str):

@@ -13,6 +13,14 @@ runs on local[N] for tests and on a large cluster unchanged:
 - Arrow enabled for the few Pandas-UDF code paths (similarity search,
   multimodal decode) — vectorized transfer instead of row pickling.
 - shuffle partitions default to cluster parallelism (overridable via env).
+- the whole-stage codegen cache sized to the engine's working set (see
+  ``CODEGEN_CACHE_ENTRIES``). Spark keeps one codegen cache per JVM and
+  sizes it from the conf active when the first plan is compiled, so the
+  first session to compile decides for every session in the JVM: a plain
+  ``SparkSession.builder`` session created after ``get_spark`` also gets
+  this size, and where a plain session compiled first (a driver that
+  builds its own session), the setting has no effect and the cache keeps
+  Spark's 100.
 """
 
 from __future__ import annotations
@@ -20,6 +28,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: ``spark.sql.codegen.cache.maxEntries``. Spark's default of 100 is an LRU
+#: smaller than the set of classes one workload cycles through, so each
+#: class is evicted before its next use and recompiled with Janino (median
+#: 11 ms, mean 20 ms per class on local[2] of a 4-vCPU machine, plus JIT and
+#: metaspace GC). Distinct generated classes, counted as Janino
+#: compilations with a cache too large to evict: the store benchmark's
+#: set-up 111, then 2-4 per cycle; curation set-up 132, then none per pass;
+#: a full ``scripts/check_correctness.py`` run at sf0.001 (all 228 queries
+#: in one session), 3323. 1000 holds any one workload's working set; a
+#: full registry sweep still evicts, which only costs recompilation.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -59,6 +79,7 @@ def get_spark(
         # keeps small-table scans parallel and is irrelevant for TB-scale
         # files (split size there is governed by maxPartitionBytes).
         .config("spark.sql.files.openCostInBytes", str(256 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -12,12 +12,32 @@ Spark itself can read.
 
 from __future__ import annotations
 
+from functools import reduce
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
+
+#: name -> (gateway client, JVM class handle)
+_CLASSES: dict[str, tuple] = {}
+
+
+def _jclass(spark: SparkSession, name: str):
+    """The JVM class ``name``, resolved once per gateway: a dotted lookup
+    through ``spark._jvm`` costs a Py4J round trip per segment (about
+    2 ms for ``org.apache.hadoop.fs.Path``), more than the call it makes."""
+    client = spark._jvm._gateway_client
+    hit = _CLASSES.get(name)
+    if hit is None or hit[0] is not client:
+        hit = _CLASSES[name] = (client, reduce(getattr, name.split("."), spark._jvm))
+    return hit[1]
+
+
+def _path(spark: SparkSession, path: str):
+    return _jclass(spark, "org.apache.hadoop.fs.Path")(path)
 
 
 def _fs_and_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    jpath = _path(spark, path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, jpath
 
@@ -27,18 +47,32 @@ def exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
+def _missing(spark: SparkSession, err: Exception) -> bool:
+    """Whether a Py4J error is Java's ``FileNotFoundException``: asking
+    for the file and catching its absence is one metadata RPC, where an
+    ``exists`` probe first is two."""
+    java = getattr(err, "java_exception", None)
+    return java is not None and bool(
+        _jclass(spark, "java.io.FileNotFoundException")._java_lang_class.isInstance(java)
+    )
+
+
 def child_names(spark: SparkSession, path: str) -> list[str]:
     """Names of direct children of ``path`` (empty if it doesn't exist)."""
     fs, jpath = _fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return []
-    return [st.getPath().getName() for st in fs.listStatus(jpath)]
+    try:
+        return [st.getPath().getName() for st in fs.listStatus(jpath)]
+    except Py4JJavaError as e:
+        if _missing(spark, e):
+            return []
+        raise
 
 
-def delete(spark: SparkSession, path: str) -> None:
-    """Recursive delete; no-op if absent."""
-    fs, jpath = _fs_and_path(spark, path)
-    if fs.exists(jpath):
+def delete(spark: SparkSession, *paths: str) -> None:
+    """Recursive delete of each path; no-op for an absent one (Hadoop's
+    delete answers False)."""
+    for path in paths:
+        fs, jpath = _fs_and_path(spark, path)
         fs.delete(jpath, True)
 
 
@@ -46,20 +80,23 @@ def rename(spark: SparkSession, src: str, dst: str) -> bool:
     """Directory rename. Atomic on HDFS/POSIX; on object stores it is a
     copy+delete — callers must treat the swap window as non-atomic."""
     fs, jsrc = _fs_and_path(spark, src)
-    jdst = spark._jvm.org.apache.hadoop.fs.Path(dst)
+    jdst = _path(spark, dst)
     return bool(fs.rename(jsrc, jdst))
+
+
+def _create(fs, jpath, text: str) -> None:
+    out = fs.create(jpath, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
 
 
 def write_text(spark: SparkSession, path: str, text: str) -> None:
     """Create/overwrite a small text file (manifests, markers) through
     the same FileSystem abstraction as the data I/O — works on every
     scheme the store accepts, unlike driver-local ``open()``."""
-    fs, jpath = _fs_and_path(spark, path)
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
+    _create(*_fs_and_path(spark, path), text)
 
 
 def write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
@@ -88,17 +125,16 @@ def write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
 
     fs, jpath = _fs_and_path(spark, path)
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    write_text(spark, tmp, text)
-    jvm = spark._jvm
-    jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
+    jtmp = _path(spark, tmp)
+    _create(fs, jtmp, text)
     try:
-        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        fc = _jclass(spark, "org.apache.hadoop.fs.FileContext").getFileContext(
             jpath.toUri(), spark._jsc.hadoopConfiguration()
         )
         arr = spark.sparkContext._gateway.new_array(
-            jvm.org.apache.hadoop.fs.Options.Rename, 1
+            _jclass(spark, "org.apache.hadoop.fs.Options.Rename"), 1
         )
-        arr[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
+        arr[0] = _jclass(spark, "org.apache.hadoop.fs.Options.Rename").OVERWRITE
         fc.rename(jtmp, jpath, arr)  # void: throws on failure
         return
     except Exception:
@@ -117,53 +153,70 @@ def write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
         raise IOError(f"write_text_atomic: rename {tmp} -> {path} failed")
 
 
-def read_text(spark: SparkSession, path: str) -> str:
-    fs, jpath = _fs_and_path(spark, path)
+def _read(spark: SparkSession, fs, jpath) -> str:
     stream = fs.open(jpath)
     try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(
+        return _jclass(spark, "org.apache.commons.io.IOUtils").toString(
             stream, "UTF-8"
         )
     finally:
         stream.close()
 
 
-def list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """Recursive (path, size) listing of data files under ``path``,
-    skipping hidden/commit markers (_SUCCESS, ._*). Driver-side metadata
-    only — one RPC stream, no data read; cardinality is file count, not
-    row count."""
+def read_text(spark: SparkSession, path: str) -> str:
+    return _read(spark, *_fs_and_path(spark, path))
+
+
+def read_text_or_none(spark: SparkSession, path: str) -> str | None:
+    """:func:`read_text`, or None when ``path`` does not exist — one
+    open, no ``exists`` probe first (store records and pointers are read
+    on every operation)."""
+    try:
+        return _read(spark, *_fs_and_path(spark, path))
+    except Py4JJavaError as e:
+        if _missing(spark, e):
+            return None
+        raise
+
+
+def _data_file_statuses(spark: SparkSession, path: str):
+    """Recursive ``FileStatus`` listing of the data files under ``path``
+    (or of ``path`` itself if it is a file), skipping hidden and commit
+    markers (_SUCCESS, ._*, .crc). A missing path lists nothing: one
+    listing RPC, no ``exists`` probe first."""
     fs, jpath = _fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return []
-    out: list[tuple[str, int]] = []
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
+    try:
+        it = fs.listFiles(jpath, True)
+        more = it.hasNext()
+    except Py4JJavaError as e:
+        if _missing(spark, e):
+            return
+        raise
+    while more:
         st = it.next()
         name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        out.append((st.getPath().toString(), int(st.getLen())))
-    return out
+        if not (name.startswith("_") or name.startswith(".")):
+            yield st
+        more = it.hasNext()
+
+
+def list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
+    """Recursive (path, size) listing of data files under ``path``.
+    Driver-side metadata only — one RPC stream, no data read;
+    cardinality is file count, not row count."""
+    return [
+        (st.getPath().toString(), int(st.getLen()))
+        for st in _data_file_statuses(spark, path)
+    ]
 
 
 def list_file_stats(spark: SparkSession, path: str) -> list[tuple[str, int, int]]:
     """Recursive (path, size, mtime_ms) listing of data files — the
-    fingerprint input for session fit caches (plans/_base.py
-    corpus_fingerprint). Same traversal as :func:`list_data_files`,
-    plus modification time so a same-size rewrite still changes the
-    fingerprint."""
-    fs, jpath = _fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return []
-    out: list[tuple[str, int, int]] = []
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        out.append(
-            (st.getPath().toString(), int(st.getLen()), int(st.getModificationTime()))
-        )
-    return out
+    fingerprint input for session caches (plans/_base.py
+    corpus_fingerprint, the testdata schema memo). Same traversal as
+    :func:`list_data_files`, plus modification time so a same-size
+    rewrite still changes the fingerprint."""
+    return [
+        (st.getPath().toString(), int(st.getLen()), int(st.getModificationTime()))
+        for st in _data_file_statuses(spark, path)
+    ]

@@ -38,6 +38,7 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from aqi_featurestore_spark.sources import fs
 
@@ -145,12 +146,22 @@ class SnapshotManifests:
             )
         return json.loads(fs.read_text(self.spark, mpath))
 
-    def read_as_of(self, as_of: int) -> DataFrame:
+    def schema(self) -> StructType | None:
+        """The store's recorded schema, or None if it has no record (a
+        store written before the record existed is read by inference).
+        One metadata read: no listing, no ``exists`` probe."""
+        text = fs.read_text_or_none(self.spark, f"{self.meta}/schema.json")
+        return None if text is None else StructType.fromJson(json.loads(text))
+
+    def record_schema(self, schema: StructType) -> None:
+        fs.write_text_atomic(self.spark, f"{self.meta}/schema.json", schema.json())
+
+    def read_as_of(self, as_of: int, *, schema: StructType | None = None) -> DataFrame:
         """Scan exactly the files of version ``as_of`` (``basePath``
-        keeps any partition columns) — the bit-identical replay."""
+        keeps any partition columns) — the bit-identical replay. A
+        ``schema`` (the store's record) spares the footer-read job."""
         files = [p for p, _sz in self.manifest(as_of)["files"]]
         if not files:
             raise ValueError(f"read_as_of({as_of}): version is empty")
-        return (
-            self.spark.read.option("basePath", self.data_path).parquet(*files)
-        )
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.option("basePath", self.data_path).parquet(*files)

@@ -24,10 +24,14 @@ import json
 import os
 from datetime import date, timedelta
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
+from aqi_featurestore_spark.schemas import as_nullable
 from aqi_featurestore_spark.sources import fs
+
+_PARTS = ("year", "month", "day")
 
 
 class OfflineStore:
@@ -57,6 +61,51 @@ class OfflineStore:
         #: stats are computed at WRITE time (one batch-sized pass).
         self.stat_cols = tuple(stat_cols)
         self.manifests = SnapshotManifests(spark, path)
+        self._recorded: StructType | None = None
+
+    # -- schema record -------------------------------------------------------
+    # The first append into an empty store records the schema Spark would
+    # infer from its files (``{path}.meta/schema.json``); every read then
+    # scans with it instead of launching a footer-read job to infer it.
+
+    def schema(self) -> StructType | None:
+        """The recorded schema (None: no record, so reads infer as they
+        always did). Read once per instance: a record never changes, since
+        an append that does not match it raises."""
+        if self._recorded is None:
+            self._recorded = self.manifests.schema()
+        return self._recorded
+
+    def _reader(self) -> DataFrameReader:
+        schema = self.schema()
+        return self.spark.read if schema is None else self.spark.read.schema(schema)
+
+    @staticmethod
+    def _store_schema(batch: DataFrame) -> StructType:
+        """What ``spark.read.parquet(path).schema`` infers after
+        ``batch`` is written partitioned by year/month/day: the data
+        columns, all nullable, then the partition columns as int."""
+        data = [f for f in as_nullable(batch.schema).fields if f.name not in _PARTS]
+        return StructType([*data, *[StructField(c, IntegerType(), True) for c in _PARTS]])
+
+    @staticmethod
+    def _check_schema(batch: DataFrame, recorded: StructType) -> None:
+        want = {f.name: f.dataType for f in recorded.fields if f.name not in _PARTS}
+        got = {
+            f.name: f.dataType
+            for f in as_nullable(batch.schema).fields
+            if f.name not in _PARTS
+        }
+        diff = sorted(c for c in want.keys() | got.keys() if want.get(c) != got.get(c))
+        if diff:
+            detail = ", ".join(
+                f"{c} (store {want[c].simpleString() if c in want else 'absent'}, "
+                f"batch {got[c].simpleString() if c in got else 'absent'})"
+                for c in diff
+            )
+            raise ValueError(
+                f"append: batch columns differ from the store's recorded schema: {detail}"
+            )
 
     # -- read ---------------------------------------------------------------
 
@@ -132,7 +181,7 @@ class OfflineStore:
         elif as_of is not None:
             df = self._read_version(as_of)
         else:
-            df = self.spark.read.parquet(self.path)
+            df = self._reader().parquet(self.path)
         if since is not None:
             df = df.where(
                 F.make_date("year", "month", "day") >= F.lit(since.isoformat()).cast("date")
@@ -175,7 +224,7 @@ class OfflineStore:
             aggs.append(F.min(c).alias(f"min_{c}"))
             aggs.append(F.max(c).alias(f"max_{c}"))
         rows = (
-            self.spark.read.option("basePath", self.path)
+            self._reader().option("basePath", self.path)
             .parquet(*files)
             .groupBy(F.input_file_name().alias("__f"))
             .agg(*aggs)
@@ -210,7 +259,7 @@ class OfflineStore:
         self.manifests.set_floor(version)
 
     def _read_version(self, as_of: int) -> DataFrame:
-        return self.manifests.read_as_of(as_of)
+        return self.manifests.read_as_of(as_of, schema=self.schema())
 
     @staticmethod
     def _norm_preds(
@@ -285,7 +334,7 @@ class OfflineStore:
         v = as_of if as_of is not None else self.version()
         if v == 0:
             # no manifests (pre-discipline store): no stats, no pruning
-            return _residual(self.spark.read.parquet(self.path))
+            return _residual(self._reader().parquet(self.path))
         kept, _skipped = self.prune_plan(preds, as_of=v)
         if as_of is None:
             # round-10 ADVICE: a CURRENT read must also see data files
@@ -304,10 +353,8 @@ class OfflineStore:
             ]
         if not kept:
             # every file provably empty under the predicate: schema-only
-            return _residual(
-                self.spark.read.parquet(self.path).where(F.lit(False))
-            )
-        df = self.spark.read.option("basePath", self.path).parquet(*kept)
+            return _residual(self._reader().parquet(self.path).where(F.lit(False)))
+        df = self._reader().option("basePath", self.path).parquet(*kept)
         return _residual(df)
 
     # -- write --------------------------------------------------------------
@@ -328,10 +375,21 @@ class OfflineStore:
         """Append feature rows; with ``dedup`` (default) drops rows whose
         (keys, ts) already exist — making re-runs idempotent. The existing
         side is pruned to the date range of the incoming batch, so the
-        anti-join never scans the whole store."""
+        anti-join never scans the whole store.
+
+        The first append into an empty store records the store's schema;
+        a later batch whose data columns or types differ from the record
+        raises ``ValueError`` naming them (without the check the append
+        would land, and reads would return whichever file footer Spark
+        sampled first)."""
         batch = self._with_partition_cols(batch)
         batch = batch.dropDuplicates([*self.keys, self.ts])
-        if dedup and self.exists():
+        recorded = self.schema()
+        if recorded is not None:
+            self._check_schema(batch, recorded)
+        # a record is only written after data lands, so it proves data
+        has_data = recorded is not None or self.exists()
+        if dedup and has_data:
             lo, hi = (
                 batch.agg(
                     F.min(F.make_date("year", "month", "day")),
@@ -351,6 +409,9 @@ class OfflineStore:
             .mode("append")
             .parquet(self.path)
         )
+        if not has_data:
+            self._recorded = self._store_schema(batch)
+            self.manifests.record_schema(self._recorded)
         self._record_version("append")
 
     # -- maintenance --------------------------------------------------------

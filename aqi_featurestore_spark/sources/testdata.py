@@ -8,13 +8,29 @@ ns -> microsecond timestamps with integer arithmetic (``DIV 1000`` — a
 double division would lose precision above 2^53 ns). Truncation toward
 zero matches how DuckDB ingests the same file, so oracle comparisons stay
 exact.
+
+Every read scans with a memoized schema: ``spark.read.parquet`` otherwise
+launches a footer-read job per call to infer it. The memo holds one entry
+per (applicationId, path), checked against the (path, size, mtime) listing
+of the data files, so a rewritten file is inferred again and replaces its
+entry. One lock covers the check and the inference: concurrent readers of
+one file wait for a single inference.
 """
 
 from __future__ import annotations
 
+import os
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
+
+from aqi_featurestore_spark.sources import fs
+
+#: (applicationId, path) -> (data-file listing, inferred schema)
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+_LOCK = threading.Lock()
 
 
 def _pin_session(spark: SparkSession) -> None:
@@ -26,11 +42,23 @@ def _pin_session(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    stamp = tuple(fs.list_file_stats(spark, path))
+    if not stamp:  # missing: leave the error to Spark
+        return spark.read.parquet(path)
+    key = (spark.sparkContext.applicationId, path)
+    with _LOCK:
+        hit = _SCHEMAS.get(key)
+        if hit is None or hit[0] != stamp:
+            hit = _SCHEMAS[key] = (stamp, spark.read.parquet(path).schema)
+    return spark.read.schema(hit[1]).parquet(path)
+
+
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events table with ``ts`` as a proper TimestampType regardless of the
     file's physical unit."""
     _pin_session(spark)
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/events.parquet")
     if isinstance(df.schema["ts"].dataType, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return df
@@ -41,7 +69,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return read_events(spark, sf_dir)
     _pin_session(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 TESTDATA_TABLES = (
@@ -55,8 +83,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     queryable through ``spark.sql`` (the reference's SQL probes, S10; and
     ANSI-SQL users generally). Views are lazily planned — registration
     costs nothing until queried."""
-    import os
-
     for name in TESTDATA_TABLES:
         if os.path.exists(f"{sf_dir}/{name}.parquet"):
             read_table(spark, sf_dir, name).createOrReplaceTempView(name)

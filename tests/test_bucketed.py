@@ -5,11 +5,30 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from aqi_featurestore_spark.sources import fs
 from aqi_featurestore_spark.sources.bucketed import read_bucketed, write_bucketed
+
+TABLES = ("t_feat_b", "t_dim_b")
+
+
+def _location(spark, table):
+    return f"{spark.conf.get('spark.sql.warehouse.dir').rstrip('/')}/{table}"
+
+
+def _drop_and_purge(spark, table):
+    """Drop the table and delete its warehouse location: a run killed
+    before its cleanup leaves the location behind without the catalog
+    entry, and ``saveAsTable`` then refuses to write there."""
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    fs.delete(spark, _location(spark, table))
 
 
 def test_bucketed_join_has_no_exchange(spark):
-    # tables land in the default warehouse dir (gitignored); dropped below
+    # tables land in the default warehouse dir (gitignored); dropped below.
+    # Simulate the location a killed earlier run orphaned, then clear it.
+    spark.range(1).write.mode("overwrite").parquet(_location(spark, "t_feat_b"))
+    for t in TABLES:
+        _drop_and_purge(spark, t)
     left = spark.range(2000).select(
         (F.col("id") % 97).alias("entity_id"), F.col("id").alias("event_id"),
         (F.col("id") % 13).cast("double").alias("val"),
@@ -36,5 +55,5 @@ def test_bucketed_join_has_no_exchange(spark):
         assert "Exchange" in plain_plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS t_feat_b")
-        spark.sql("DROP TABLE IF EXISTS t_dim_b")
+        for t in TABLES:
+            _drop_and_purge(spark, t)
